@@ -105,9 +105,6 @@ object SparkEntry {
       })
     }
 
-  private val purchaseEdgesCache =
-    scala.collection.mutable.Map[(SparkSession, String), DataFrame]()
-
   private val minhashPairsCache =
     scala.collection.mutable.Map[(SparkSession, String), DataFrame]()
 
@@ -195,27 +192,6 @@ object SparkEntry {
       })
     }
 
-  /** Distinct customer↔supplier purchase edges (parity-encoded node ids),
-    * shared by the `q_pagerank` and `q_ppr` gates — the same
-    * checkpoint-the-expensive-relation pattern as [[sharedJaccardPairs]]:
-    * a real pipeline derives the link graph once and runs every graph
-    * analysis against the materialized edge table.
-    */
-  private[graft] def sharedPurchaseEdges(s: SparkSession, dir: String): DataFrame =
-    synchronized {
-      purchaseEdgesCache.getOrElseUpdate((s, dir), {
-        val path = new java.io.File(sharedRelDir,
-          "edges_" + java.security.MessageDigest.getInstance("MD5")
-            .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString)
-          .getAbsolutePath
-        s.sql("""
-          SELECT DISTINCT o.o_custkey * 2 AS src, l.l_suppkey * 2 + 1 AS dst
-          FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey""")
-          .write.mode("overwrite").parquet(path)
-        s.read.parquet(path)
-      })
-    }
-
   private val preparedGraphCache =
     scala.collection.mutable.Map[(SparkSession, String), Graphs.PreparedGraph]()
 
@@ -241,7 +217,7 @@ object SparkEntry {
     * vs the shipped chain: −1 edge-table parquet write, −2 edge-table
     * reads, −1 exchange, −1 sort per (session, fixture); A/B at sf0.1
     * 5.2–5.7 s → 3.9–4.2 s with identical pagerank output
-    * (tools/GraphFusedAB). A degree-only session that wants no
+    * (OPTIMIZATION_r15.md, "Graph family"). A degree-only session that wants no
     * checkpoint still has the [[sources.GraphIndex.build]] API.
     */
   private def sharedPreparedGraph(s: SparkSession, dir: String): Graphs.PreparedGraph =
@@ -299,11 +275,10 @@ object SparkEntry {
     * checkpoint) become unexecutable after the clear — local checkpoints
     * have no lineage to recompute from, and the parquet-backed shared
     * relations are deleted from disk. Execute (collect/write) every held
-    * gate result BEFORE clearing; Bench/Verify and the probes all do.
+    * gate result BEFORE clearing; Bench, Verify and tools.Profile all do.
     */
   def clearSharedRelations(): Unit = synchronized {
     jaccardPairsCache.clear()
-    purchaseEdgesCache.clear()
     // cache only — the staged FILES stay: the DuckDB oracle replay reads
     // them after this process exits (see minhashPairsStagePath)
     minhashPairsCache.clear()
@@ -993,7 +968,8 @@ object SparkEntry {
         // materialize the 1-row result so the staged copy can be DELETED
         // before returning — a lazily returned frame would pin the temp
         // dirs, and each gate run leaks a full lineitem copy (11 GB at
-        // sf100cd; a TimeGates double-pass filled the disk, r14)
+        // sf100cd; a double-pass probe filled the disk — SCALE.md
+        // "Round-14: the corpus-independent-literal audit")
         val out = localResult(s, res)
         deleteDirs(tmpData, tmpIdx)
         out

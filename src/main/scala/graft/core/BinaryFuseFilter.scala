@@ -278,14 +278,27 @@ object BinaryFuseFilter {
       segmentCountLength, arrayLength, fingerprints)
   }
 
+  /** Rebuilds a filter from its blob. The length the header implies
+    * (`serializedBytes`, computed in Long) must equal the
+    * blob's before anything is allocated: a truncated, over-long or hostile
+    * blob fails here with a named error instead of an out-of-bounds read or
+    * an OutOfMemoryError.
+    */
   def deserialize(bits: Int, blob: Array[Byte]): BinaryFuseFilter = {
     val bb = ByteBuffer.wrap(blob).order(ByteOrder.LITTLE_ENDIAN)
+    if (blob.length < 28)
+      throw new IllegalArgumentException(s"fuse$bits blob: ${blob.length} bytes, shorter than its 28-byte header")
+    val arrayLength = bb.getInt(24)
+    if (arrayLength < 0)
+      throw new IllegalArgumentException(s"fuse$bits blob: header array length $arrayLength out of range")
+    val expected = 28L + (bits / 8) * arrayLength.toLong + (if (bits == 16) 4 else 0)
+    if (expected != blob.length)
+      throw new IllegalArgumentException(s"fuse$bits blob: header implies $expected bytes, blob has ${blob.length}")
     val seed = bb.getLong(0)
     val size = bb.getInt(8)
     val segmentLength = bb.getInt(12)
     val segmentCount = bb.getInt(16)
     val segmentCountLength = bb.getInt(20)
-    val arrayLength = bb.getInt(24)
     val fps = new Array[Char](arrayLength)
     var i = 0
     if (bits == 8) while (i < arrayLength) { fps(i) = (blob(28 + i) & 0xff).toChar; i += 1 }

@@ -208,10 +208,24 @@ object XorFilter {
     new XorFilter(bits, seed, blockLength, fingerprints)
   }
 
+  /** Rebuilds a filter from its blob. The length the header implies
+    * (`serializedBytes`, computed in Long) must equal the blob's
+    * before anything is allocated: a truncated, over-long or hostile blob
+    * fails here with a named error instead of an out-of-bounds read or an
+    * OutOfMemoryError.
+    */
   def deserialize(bits: Int, blob: Array[Byte]): XorFilter = {
     val bb = ByteBuffer.wrap(blob).order(ByteOrder.LITTLE_ENDIAN)
+    if (blob.length < 16)
+      throw new IllegalArgumentException(s"xor$bits blob: ${blob.length} bytes, shorter than its 16-byte header")
+    val blockLengthL = bb.getLong(8)
+    if (blockLengthL < 0 || blockLengthL > Int.MaxValue)
+      throw new IllegalArgumentException(s"xor$bits blob: header block length $blockLengthL out of range")
+    val expected = 16L + (bits / 8) * 3L * blockLengthL
+    if (expected != blob.length)
+      throw new IllegalArgumentException(s"xor$bits blob: header implies $expected bytes, blob has ${blob.length}")
     val seed = bb.getLong(0)
-    val blockLength = bb.getLong(8).toInt
+    val blockLength = blockLengthL.toInt
     val n = 3 * blockLength
     val fps = new Array[Char](n)
     var i = 0

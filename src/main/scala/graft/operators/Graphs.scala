@@ -378,8 +378,8 @@ object Graphs {
     // window whose required ordering is a prefix of the dedup's). The
     // former distinct -> groupBy -> join form paid an (src, dst) exchange
     // plus an src exchange of the deduped relation plus two sorts (A/B at
-    // 117M mirrored edges: 14.3 s vs 20.6 s, identical output —
-    // tools/GraphBuildAB, SCALE.md round-15). Bonus for superstep loops:
+    // 117M mirrored edges: 14.3 s vs 20.6 s, identical output — SCALE.md
+    // "Round-15: GraphIndex.build under the bar"). Bonus for superstep loops:
     // the checkpoint below then advertises HashPartitioning(src) + (src,
     // dst) ordering, so per-iteration rank joins plan exchange-free and
     // sort-free on the edge side with no separate re-clustering pass.

@@ -213,17 +213,26 @@ object FileStreams {
     * production pipeline takes from its catalog. Used by the streaming
     * gates as the upper-bound `expectedStateKeys` estimate: dedup state
     * <= distinct keys <= rows, join buffers <= rows inside the watermark
-    * horizon, window state <= rows.
+    * horizon, window state <= rows. A directory is walked recursively, so
+    * a `partitionBy` layout (`k=v/part-*.parquet`) counts in full; names
+    * starting with `_` or `.` (`_SUCCESS`, `_temporary`, checksums) are
+    * skipped as Spark's reader skips them. A path holding no parquet file
+    * fails rather than estimating 0.
     */
   def parquetRowCount(spark: SparkSession, path: String): Long = {
     val hconf = spark.sessionState.newHadoopConf()
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(hconf)
-    val files =
-      if (fs.getFileStatus(p).isDirectory)
-        fs.listStatus(p).toSeq.map(_.getPath)
-          .filter(_.getName.endsWith(".parquet"))
-      else Seq(p)
+    def parquetFiles(dir: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.Path] =
+      fs.listStatus(dir).toSeq
+        .filterNot(st => st.getPath.getName.startsWith("_") || st.getPath.getName.startsWith("."))
+        .flatMap { st =>
+          if (st.isDirectory) parquetFiles(st.getPath)
+          else Seq(st.getPath).filter(_.getName.endsWith(".parquet"))
+        }
+    val files = if (fs.getFileStatus(p).isDirectory) parquetFiles(p) else Seq(p)
+    if (files.isEmpty)
+      throw new IllegalArgumentException(s"parquetRowCount: no parquet file under $path")
     files.map { f =>
       val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, hconf)
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)

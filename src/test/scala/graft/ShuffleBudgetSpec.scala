@@ -65,8 +65,7 @@ class ShuffleBudgetSpec extends AnyFunSuite with BeforeAndAfterAll {
     listener.shuffleWritten.reset()
     SparkEntry.queries(gate)(spark, sfDir)
       .write.format("noop").mode("overwrite").save()
-    // listener events drain asynchronously; settle before reading (same
-    // contract as tools/ConstrainedProbe)
+    // listener events drain asynchronously; settle before reading
     Thread.sleep(500)
     listener.shuffleWritten.sum().toDouble / docs
   }

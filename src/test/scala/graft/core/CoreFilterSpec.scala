@@ -211,6 +211,8 @@ class CoreFilterSpec extends AnyFunSuite {
       assert(keys.forall(back.mightContain))
       assert(keys.forall(k => BinaryFuseFilter.probeBlob(bits, blob, k)))
       assert(back.serialize().sameElements(blob))
+      assertMalformedRejected(s"fuse$bits", blob, BinaryFuseFilter.deserialize(bits, _),
+        headerBytes = 28, lengthAt = 24)
     }
   }
 
@@ -228,6 +230,26 @@ class CoreFilterSpec extends AnyFunSuite {
     assert(keys.forall(f.mightContain))
   }
 
+  /** A truncated, an over-long, and a 32-byte blob whose header length
+    * field claims 2^31-1 must each fail fast with a named
+    * IllegalArgumentException — not an out-of-bounds read, a silently
+    * accepted tail, or an OutOfMemoryError from allocating what the header
+    * claims.
+    */
+  private def assertMalformedRejected(family: String, blob: Array[Byte],
+      deserialize: Array[Byte] => Any, headerBytes: Int, lengthAt: Int): Unit = {
+    val huge = java.util.Arrays.copyOf(blob, 32)
+    java.nio.ByteBuffer.wrap(huge).order(java.nio.ByteOrder.LITTLE_ENDIAN).putInt(lengthAt, Int.MaxValue)
+    for ((label, bad) <- Seq(
+        "truncated" -> blob.dropRight(1),
+        "header only, truncated" -> blob.take(headerBytes - 1),
+        "over-long" -> (blob :+ 0.toByte),
+        "huge header" -> huge)) {
+      val e = intercept[IllegalArgumentException](deserialize(bad))
+      assert(e.getMessage.startsWith(s"$family blob"), s"$family $label: ${e.getMessage}")
+    }
+  }
+
   // --- Xor filters --------------------------------------------------------
 
   test("xor: no false negatives, FPR sanity, sizes match published figures") {
@@ -240,6 +262,8 @@ class CoreFilterSpec extends AnyFunSuite {
       val back = XorFilter.deserialize(bits, blob)
       assert(keys.forall(back.mightContain))
       assert(keys.forall(k => XorFilter.probeBlob(bits, blob, k)))
+      assertMalformedRejected(s"xor$bits", blob, XorFilter.deserialize(bits, _),
+        headerBytes = 16, lengthAt = 8)
       val probes = (1000001L to 1050000L).map(DuckDbHash.hashLong)
       val fpr = probes.count(f.mightContain).toDouble / probes.size
       assert(fpr < maxFpr, s"xor$bits FPR $fpr above bound $maxFpr")

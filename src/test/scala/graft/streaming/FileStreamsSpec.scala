@@ -620,4 +620,17 @@ class FileStreamsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .collect().map(_.toSeq).toSet
     assert(counts(None, keys = 5000L) == counts(Some(4), keys = -1L))
   }
+
+  test("parquet row count: partitioned directories count in full; no parquet file fails") {
+    val root = java.nio.file.Files.createTempDirectory("graft-rowcount")
+    try {
+      val table = root.resolve("events_by_type").toString
+      val events = spark.read.parquet(s"$dir/events.parquet")
+      events.write.partitionBy("event_type").parquet(table)
+      assert(FileStreams.parquetRowCount(spark, table) == events.count())
+      val empty = java.nio.file.Files.createDirectory(root.resolve("empty")).toString
+      val e = intercept[IllegalArgumentException](FileStreams.parquetRowCount(spark, empty))
+      assert(e.getMessage.contains("no parquet file"))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
+  }
 }
